@@ -34,7 +34,11 @@ the interface is exactly what an Iceberg backend would implement:
 - **Bucket layout**: rows are hash-bucketed by the merge key
   (``pmod(xxhash64(url), n_buckets)``); the bucket id is stable across
   batches, so delta files co-locate with their base files by construction
-  and point lookups prune to one bucket's file list.
+  and point lookups prune to one bucket's file list. Writers compute the
+  bucket in Spark; point lookups (``read_keys``/``files_for_keys``) route
+  their keys on the driver with a bit-exact Python port of Spark's XXH64
+  (``_key_bucket``), so bucket routing and bloom pruning start no Spark job
+  — a lookup runs only the scan its caller triggers.
 - **Manifest split (Iceberg manifest-file twin)**: the snapshot JSON holds
   one content-addressed manifest *reference* per bucket; the per-bucket file
   list (path, row count, key bloom) lives in an immutable side manifest that
@@ -114,6 +118,77 @@ def _truncate_lit(horizon: list) -> F.Column:
 
 def _bucket_col(key: str, n_buckets: int) -> F.Column:
     return F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int")
+
+
+# ---------------------------------------------------------------------------
+# Driver-side twin of ``_bucket_col``: Spark's ``xxhash64`` is XXH64 with
+# seed 42 over the string's UTF-8 bytes (lanes read little-endian), returned
+# as a signed 64-bit long; ``pmod`` by a positive modulus equals Python's
+# ``%``. Bit-exactness against the JVM is pinned in tests/test_point_read.py.
+# ---------------------------------------------------------------------------
+
+_M64 = (1 << 64) - 1
+_XXH_P1 = 0x9E3779B185EBCA87
+_XXH_P2 = 0xC2B2AE3D27D4EB4F
+_XXH_P3 = 0x165667B19E3779F9
+_XXH_P4 = 0x85EBCA77C2B2AE63
+_XXH_P5 = 0x27D4EB2F165667C5
+_SPARK_HASH_SEED = 42
+
+
+def _rotl64(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _xxh64_round(acc: int, lane: int) -> int:
+    return (_rotl64((acc + lane * _XXH_P2) & _M64, 31) * _XXH_P1) & _M64
+
+
+def _xxhash64(data: bytes) -> int:
+    """XXH64 of ``data`` as Spark's ``xxhash64`` returns it (signed long)."""
+    seed = _SPARK_HASH_SEED
+    n = len(data)
+    i = 0
+    if n >= 32:
+        v1 = (seed + _XXH_P1 + _XXH_P2) & _M64
+        v2 = (seed + _XXH_P2) & _M64
+        v3 = seed
+        v4 = (seed - _XXH_P1) & _M64
+        while i <= n - 32:
+            v1 = _xxh64_round(v1, int.from_bytes(data[i : i + 8], "little"))
+            v2 = _xxh64_round(v2, int.from_bytes(data[i + 8 : i + 16], "little"))
+            v3 = _xxh64_round(v3, int.from_bytes(data[i + 16 : i + 24], "little"))
+            v4 = _xxh64_round(v4, int.from_bytes(data[i + 24 : i + 32], "little"))
+            i += 32
+        h = (_rotl64(v1, 1) + _rotl64(v2, 7) + _rotl64(v3, 12) + _rotl64(v4, 18)) & _M64
+        for v in (v1, v2, v3, v4):
+            h = ((h ^ _xxh64_round(0, v)) * _XXH_P1 + _XXH_P4) & _M64
+    else:
+        h = (seed + _XXH_P5) & _M64
+    h = (h + n) & _M64
+    while i <= n - 8:
+        h ^= _xxh64_round(0, int.from_bytes(data[i : i + 8], "little"))
+        h = (_rotl64(h, 27) * _XXH_P1 + _XXH_P4) & _M64
+        i += 8
+    if i <= n - 4:
+        h ^= (int.from_bytes(data[i : i + 4], "little") * _XXH_P1) & _M64
+        h = (_rotl64(h, 23) * _XXH_P2 + _XXH_P3) & _M64
+        i += 4
+    while i < n:
+        h ^= (data[i] * _XXH_P5) & _M64
+        h = (_rotl64(h, 11) * _XXH_P1) & _M64
+        i += 1
+    h ^= h >> 33
+    h = (h * _XXH_P2) & _M64
+    h ^= h >> 29
+    h = (h * _XXH_P3) & _M64
+    h ^= h >> 32
+    return h - (1 << 64) if h >> 63 else h
+
+
+def _key_bucket(key: str, n_buckets: int) -> int:
+    """``_bucket_col`` evaluated on the driver for one string key."""
+    return _xxhash64(key.encode("utf-8")) % n_buckets
 
 
 # ---------------------------------------------------------------------------
@@ -1170,10 +1245,9 @@ class LakeTable:
             # determine the full member payload (identity-bearing columns —
             # e.g. ``chunk_id``+``embedding``, both content-derived), else
             # unchanged-member suppression weakens to subset equality.
-            # The full-payload default is the oracle-gated shape.
-            if columns is not None:
-                missing = set(columns) - set(c for c, _ in self.schema_columns())
-                assert not missing, f"unknown feed columns: {sorted(missing)}"
+            # The full-payload default is the oracle-gated shape. The
+            # projection is checked against the window's ``until`` schema
+            # below, once that snapshot is resolved.
         else:
             assert self.mode == "row", "read_changes serves row/set-mode tables"
             assert member_key is None, "member_key applies to set-mode tables only"
@@ -1190,6 +1264,12 @@ class LakeTable:
         snap_until = cur if until == int(cur["snapshot_id"]) else self.snapshot(until)
         if snap_until is None:
             raise ChangeFeedUnavailableError(f"snapshot {until} is expired")
+        if columns is not None:
+            missing = set(columns) - {c for c, _ in snap_until["schema"]}
+            if missing:
+                raise ValueError(
+                    f"unknown feed columns at snapshot {until}: {sorted(missing)}"
+                )
         snap_since = None
         if since > 0:
             snap_since = self.snapshot(since)
@@ -1881,40 +1961,44 @@ class LakeTable:
             return F.col("bucket").cast("int")
         return _bucket_col(self.key, self.n_buckets)
 
-    def _buckets_of_keys(self, spark: SparkSession, keys: list[str]) -> dict[int, list[str]]:
-        """bucket id → keys, via one tiny Spark job (the bucket hash is
-        ``xxhash64``, a JVM function — constant cost, not data-dependent).
-        Column-bucketed tables can't derive a key's bucket (it depends on the
-        row's vector), so every bucket is in scope — the per-file key blooms
-        still prune the actual scan."""
+    def _buckets_of_keys(self, snap: dict, keys: list[str]) -> dict[int, list[str]]:
+        """bucket id → keys, computed on the driver (``_key_bucket`` is the
+        bit-exact twin of the writers' ``_bucket_col``), so routing starts
+        no Spark job. Column-bucketed tables can't derive a key's bucket (it
+        depends on the row's vector), so every bucket of ``snap`` is in
+        scope — the per-file key blooms still prune the actual scan."""
         if self.bucket_source == "column":
-            snap = self.current_snapshot()
-            bs = [int(b) for b in snap["buckets"]] if snap else []
-            return {b: list(keys) for b in bs}
-        kdf = spark.createDataFrame([(k,) for k in keys], f"`{self.key}` string")
-        rows = kdf.select(
-            F.col(self.key), _bucket_col(self.key, self.n_buckets).alias("_b")
-        ).collect()
+            return {int(b): list(keys) for b in snap["buckets"]}
         out: dict[int, list[str]] = {}
-        for r in rows:
-            out.setdefault(int(r["_b"]), []).append(r[self.key])
+        for k in keys:
+            out.setdefault(_key_bucket(k, self.n_buckets), []).append(k)
         return out
+
+    def _key_entries(self, snap: dict, keys: list[str]) -> dict[str, list[dict]]:
+        """bucket → the manifest entries of the files that can hold
+        ``keys``: each key routed to its bucket, then that bucket's files
+        bloom-pruned against the keys routed there. Driver-only — the one
+        file set both ``files_for_keys`` reports and ``read_keys`` scans."""
+        all_entries = self._entries(snap)
+        return {
+            str(b): self._prune_entries(
+                all_entries.get(str(b), []), [_bloom_hashes(k) for k in ks]
+            )
+            for b, ks in self._buckets_of_keys(snap, keys).items()
+        }
 
     def files_for_keys(self, spark: SparkSession, keys: list[str]) -> list[str]:
         """The exact data files a ``read_keys`` probe will scan (bucket
         pruning + per-file bloom skipping) — exposed so tests/PLANS.md can
         pin the read-path promise: a 1-key probe reads only the files that
-        can contain it, not the bucket's whole delta stack."""
+        can contain it, not the bucket's whole delta stack. Starts no Spark
+        job (``spark`` is kept for the read-path call shape)."""
         snap = self.current_snapshot()
         if snap is None:
             return []
-        all_entries = self._entries(snap)
-        files: list[str] = []
-        for b, ks in self._buckets_of_keys(spark, keys).items():
-            hashes = [_bloom_hashes(k) for k in ks]
-            for e in self._prune_entries(all_entries.get(str(b), []), hashes):
-                files.append(self._abs(e["p"]))
-        return files
+        return [
+            self._abs(e["p"]) for es in self._key_entries(snap, keys).values() for e in es
+        ]
 
     def read_keys(
         self,
@@ -1925,13 +2009,16 @@ class LakeTable:
         """Point/multi-point lookup: resolved LIVE rows for exactly ``keys``.
         Scans only the keys' buckets and, within them, only the files whose
         bloom may contain a probed key — the O(matching files) read path
-        (bench: `cdc_lake_point_read`; pinned in tests/test_lake_sink.py)."""
+        (bench: `cdc_lake_point_read`; pinned in tests/test_lake_sink.py).
+        Routing and pruning run on the driver: no Spark job starts until
+        the caller acts on the returned DataFrame."""
         snap = self.current_snapshot()
         if snap is None:
             return None
-        all_entries = self._entries(snap)
-        by_bucket = self._buckets_of_keys(spark, keys)
-        sub = {str(b): all_entries.get(str(b), []) for b in by_bucket}
+        # the survivors already passed the per-bucket bloom test, so the
+        # probe's own pruning inside _read_resolved keeps all of them; the
+        # probe_keys still drive its row filter
+        sub = self._key_entries(snap, keys)
         df = self._read_resolved(spark, snap, sub, columns=columns, probe_keys=keys)
         if df is None:
             return None
@@ -2262,6 +2349,9 @@ class LakeTable:
         and replace_keys re-run their whole body against fresh state)."""
         last_err: CommitConflictError | None = None
         for _attempt in range(5):
+            # each attempt reports only its own jobs — a commit that skips
+            # the stats job must not carry the previous commit's time
+            self.last_commit_timings = {}
             snap = self.current_snapshot()
             parent = snap["snapshot_id"] if snap else 0
             sid = parent + 1

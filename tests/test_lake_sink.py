@@ -458,3 +458,21 @@ def test_expire_snapshots_bounds_metadata(spark, tmp_path):
     )
     table.expire_snapshots(keep_last=2)
     assert table.read(spark).count() == 21
+
+
+def test_commit_timings_cover_only_the_latest_commit(spark, tmp_path):
+    """A commit that runs no stats job (an empty set append) reports no
+    ``stats`` time, not the previous commit's."""
+    schema = (
+        "url string, warc_ts timestamp, pos long, op string, is_deleted int,"
+        " chunk_index int, content string"
+    )
+    table = LakeTable(str(tmp_path / "tm"), key="url", n_buckets=2, mode="set")
+    ts = dt.datetime(2024, 1, 1)
+    rows = spark.createDataFrame([("u1", ts, 1, "c", 0, 0, "c0")], schema)
+    table.merge_sets(spark, rows, epoch_id=0, pre_reduced=True)
+    assert "stats" in table.last_commit_timings
+    table.merge_sets(spark, spark.createDataFrame([], schema), epoch_id=1, pre_reduced=True)
+    assert table.current_snapshot()["epochs"].get("1") is not None
+    assert "stats" not in table.last_commit_timings
+    assert "write" in table.last_commit_timings

@@ -413,3 +413,33 @@ def test_expired_replace_sidecar_refuses_feed(spark, tmp_path):
     assert not _os.path.isdir(rep) or not _os.listdir(rep)
     with pytest.raises(ChangeFeedUnavailableError):
         t.read_changes(spark, base)
+
+
+def test_set_feed_columns_checked_against_window_schema(spark, tmp_path):
+    """``columns=`` is validated against the window's ``until`` schema: a
+    column added by a later commit does not exist for an earlier window."""
+    t, base, _e1, until = _chunks_table(spark, tmp_path)
+    t.merge_sets(
+        spark,
+        spark.createDataFrame(
+            [("g", "c", _ts(20), 20, 0, 0, "g0", "en")],
+            _SET_SCHEMA + ", lang string",
+        ),
+        epoch_id=3,
+        pre_reduced=True,
+    )
+    assert ("lang", "string") in t.schema_columns()
+    with pytest.raises(ValueError, match="lang"):
+        t.read_changes(
+            spark, base, until, member_key="chunk_index", columns=["content", "lang"]
+        )
+    # the same projection is valid for a window that ends after the column
+    rows = t.read_changes(
+        spark, until, member_key="chunk_index", columns=["content", "lang"]
+    ).collect()
+    assert [(r["url"], r["lang"]) for r in rows] == [("g", "en")]
+    # and the old window still serves its own columns
+    got = t.read_changes(spark, base, until, member_key="chunk_index", columns=["content"])
+    assert {(r["url"], r["chunk_index"]) for r in got.collect()} == {
+        ("a", 1), ("b", 0), ("d", 0)
+    }
